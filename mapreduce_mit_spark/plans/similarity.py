@@ -542,9 +542,7 @@ def q89_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("_sim").desc(), "vec_id")
         .limit(ANN_K)
     )
-    queries1 = b.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
+    queries1 = _pinned_query(b)
     marked = _mark_exact_topk(
         hits.withColumn("query_id", F.lit(QUERY_VEC_ID).cast("long")), b, queries1, ANN_K
     )
@@ -1414,39 +1412,13 @@ def ivf_codebook(
     # the quotient is bit-equal to the oracle's per-pair cosine
     ev = e.withColumn("_en", _norm(F.col("embedding")))
     for _ in range(iters):
-        # in-row argmax (r17): the k-row codebook collapses to ONE
-        # broadcast row of (cid, cv, _cn) structs; each vector ranks
-        # its cell inside a sort_array expression — the assignment
-        # half of a Lloyd round is a pure map pass with ZERO
-        # exchanges. The previous crossJoin-explode + groupBy(vec_id)
-        # form hash-exchanged every corpus row (with its embedding)
-        # once per iteration. Sentinel/tie semantics identical to
-        # _assign_to_codebook (and the oracle's row_number replay):
-        # NULL sim → +inf → last, ties → lowest cid.
-        centn = cent.select("cid", "cv", _norm(F.col("cv")).alias("_cn"))
-        cells = centn.select(
-            F.struct("cid", "cv", "_cn").alias("_c")
-        ).agg(F.collect_list("_c").alias("_cells"))
-
-        def _neg_sim(c):
-            s = _dot(F.col("embedding"), c["cv"]) / F.nullif(
-                F.col("_en") * c["_cn"], F.lit(0.0)
-            )
-            return F.coalesce(-s, F.lit(float("inf")))
-
-        # O(k) running argmin (r18, :func:`_inrow_min`) — same
-        # (key, cid) order as the r17 sort_array head, no per-row
-        # k log k sort at the cell policy's scaled k
-        best = _inrow_min(
-            F.transform(
-                "_cells",
-                lambda c: F.struct(
-                    _neg_sim(c).alias("_k"), c["cid"].alias("cid")
-                ),
-            )
-        )["cid"]
-        assign = ev.crossJoin(F.broadcast(cells)).select(
-            best.alias("cluster"), "embedding"
+        # the assignment half of a Lloyd round: the in-row nearest-cell
+        # kernel against the broadcast codebook row — a pure map pass
+        assign = ev.crossJoin(F.broadcast(_cells_row(cent))).select(
+            _nearest_cells(F.col("embedding"), F.col("_en"), 1)[0]["cid"].alias(
+                "cluster"
+            ),
+            "embedding",
         )
         # element-wise means via posexplode + narrow agg, NOT DIM avg
         # aggregate expressions: the values are identical (same rows,
@@ -1520,85 +1492,111 @@ def codebook_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def _inrow_min(keyed: Column) -> Column:
+def _inrow_min(keyed: Column, *pad: Column) -> Column:
     """O(k) running minimum over an array of ``struct<_k double,
-    cid bigint>`` — bit-identical to
+    cid bigint, ...>`` — bit-identical to
     ``element_at(sort_array(keyed), 1)`` (structs compare
     lexicographically in both forms; verified bit-equal on 2M crafted
     rows incl. +inf ties) without the O(k log k) per-row sort or the
-    sorted copy (r17 ADVICE). MEASUREMENT NOTE (r18): the fold must
-    reference ``keyed`` exactly ONCE — a first draft that also took
-    ``element_at(keyed, 1)`` and ``size(keyed)`` re-evaluated the
-    whole keyed transform (k distance computations) per reference,
-    3× the arithmetic; hence the sentinel accumulator (+inf key,
-    2⁶² cid — loses every tie to a real entry, so an all-+inf row
-    still resolves to the lowest real cid exactly like the sorted
-    head). Callers must make ``_k`` non-NULL (the +inf sentinel
-    discipline) — a NULL key would make the struct comparison NULL
-    and freeze the fold on the accumulator."""
+    sorted copy. The fold references ``keyed`` exactly ONCE (each
+    reference re-evaluates the whole keyed transform — k distance
+    computations), hence the sentinel accumulator: +inf key, 2⁶² cid,
+    then ``pad`` — typed NULLs for any trailing struct fields. The
+    sentinel loses every tie to a real entry, so an all-+inf row still
+    resolves to the lowest real cid exactly like the sorted head.
+
+    Preconditions: ``keyed`` is non-empty (an empty array returns the
+    sentinel itself), and every ``_k`` is non-NULL (the +inf sentinel
+    discipline) — a NULL key makes the struct comparison NULL and
+    freezes the fold on the accumulator."""
     return F.aggregate(
         keyed,
         F.struct(
             F.lit(float("inf")).alias("_k"),
             F.lit(2**62).cast("long").alias("cid"),
+            *pad,
         ),
         lambda acc, c: F.when(c < acc, c).otherwise(acc),
     )
 
 
-def _assign_to_codebook(part: DataFrame, centn: DataFrame) -> DataFrame:
-    """One broadcast-argmax assignment pass: every row of ``part``
-    ((vec_id, label, embedding) — the whole corpus at fit time, an
-    increment batch at ingest time) gets its max-cosine cell from the
-    normed codebook ``centn`` (cid, cv, _cn). Ties break toward the
-    LOWEST cid — (sim, -cid) max = the oracle's ORDER BY sim DESC, cid
-    row_number()=1. Norms once per side (q164's discipline): the
-    quotient is bit-equal to the oracle's per-pair cosine.
-
-    The argmax runs IN-ROW (r17, the probe-ranking discipline applied
-    to assignment): the codebook collapses to ONE broadcast row of
-    (cid, cv, _cn) structs and each vector picks its cell with a
-    sort_array over a k-entry struct array — a pure map pass, ZERO
-    exchanges. The previous form (crossJoin-explode to N×k rows +
-    groupBy(vec_id).max_by) partial-aggregated map-side but still
-    hash-exchanged every corpus row WITH its embedding once per
-    assignment — at 100 TB that is a full-corpus shuffle per fit /
-    refresh / increment for a decision that needs only k broadcast
-    rows. NULL sims (zero-norm vectors) rank LAST via the +inf
-    sentinel on the negated sort key, ties toward the lowest cid —
-    exactly the oracle's (sim DESC NULLS LAST, cid) replay, and
-    bit-equal to the old max_by(struct(sim, -cid)) form (all-NULL →
-    cid of the lowest id, identically). r18: the winner comes from an
-    O(k) running min (:func:`_inrow_min`) instead of a per-row
-    sort_array — same (key, cid) order, no k log k sort at the cell
-    policy's scaled k."""
-    cells = centn.select(
-        F.struct("cid", "cv", "_cn").alias("_c")
+def _cells_row(cent: DataFrame) -> DataFrame:
+    """The (cid, cv) codebook collapsed to ONE broadcastable row:
+    ``_cells`` = array of struct(cid, cv array<double>, _cn) with
+    ``_cn`` the centroid norm, computed once per centroid (cv is cast
+    so it matches the typed sentinel of :func:`_nearest_cells`' argmin
+    fold). Cross-join it (broadcast) to the rows that kernel ranks. The
+    row is ~0.5 KB × k — 34 MB at the k=2¹⁶ policy cap, inside the
+    64 MB broadcast threshold."""
+    cv = F.col("cv").cast("array<double>")
+    return cent.select(
+        F.struct(
+            "cid", cv.alias("cv"), _norm(F.col("cv")).alias("_cn")
+        ).alias("_c")
     ).agg(F.collect_list("_c").alias("_cells"))
 
-    def _neg_sim(c):
-        s = _dot(F.col("embedding"), c["cv"]) / F.nullif(
-            F.col("_en") * c["_cn"], F.lit(0.0)
-        )
-        return F.coalesce(-s, F.lit(float("inf")))
 
-    best = _inrow_min(
-        F.transform(
-            "_cells",
-            lambda c: F.struct(
-                _neg_sim(c).alias("_k"), c["cid"].alias("cid")
-            ),
+def _nearest_cells(vec: Column, vec_norm: Column, n: int) -> Column:
+    """THE nearest-cell kernel every IVF path ranks with: the ``n``
+    cells of the in-scope ``_cells`` row (:func:`_cells_row`) nearest
+    to ``vec`` by cosine, as an array of struct(_k, cid, cv) in
+    ascending (_k, cid) order, where ``_k`` = −cosine. ``vec_norm``
+    is ``vec``'s norm, computed once per row by the caller.
+
+    The cosine is ``_dot(vec, cv) / nullif(vec_norm · _cn, 0)`` — the
+    per-pair arithmetic of :func:`cosine_col`, so the order matches
+    the oracle's ``ORDER BY sim DESC, cid`` bit for bit: ties go to
+    the LOWEST cid, and a NULL sim (zero-norm vector) becomes the +inf
+    sentinel key, so it ranks LAST (the oracle's NULLS LAST). cid is
+    unique, so the trailing ``cv`` field never decides the order; it
+    rides along for callers that need the probed centroid (IVFADC's
+    query residual).
+
+    ``n == 1`` is the ASSIGNMENT: the argmin via the O(k) fold
+    :func:`_inrow_min`, wrapped as a one-element array (``[0]["cid"]``
+    is the cell). ``n > 1`` is the PROBE: the ``sort_array``/``slice``
+    head. Either way the ranking is a higher-order expression inside
+    the row — a pure map pass, no exchange, no window sort.
+
+    Preconditions: ``_cells`` is non-empty (a codebook of ≥ 1 cell —
+    an empty one yields the sentinel cid 2⁶², a cell that matches no
+    list), and the keys are non-NULL, which the +inf sentinel
+    guarantees for any finite ``vec`` (the ingestion gate,
+    :func:`valid_embeddings`, rejects the rest)."""
+
+    def keyed(c):
+        s = _dot(vec, c["cv"]) / F.nullif(vec_norm * c["_cn"], F.lit(0.0))
+        return F.struct(
+            F.coalesce(-s, F.lit(float("inf"))).alias("_k"),
+            c["cid"].alias("cid"),
+            c["cv"].alias("cv"),
         )
-    )["cid"]
+
+    ranked = F.transform("_cells", keyed)
+    if n == 1:
+        return F.array(
+            _inrow_min(ranked, F.lit(None).cast("array<double>").alias("cv"))
+        )
+    return F.slice(F.sort_array(ranked), 1, n)
+
+
+def _assign_to_codebook(
+    part: DataFrame, cent: DataFrame, carry: tuple = ("label",)
+) -> DataFrame:
+    """One broadcast assignment pass: every row of ``part`` — the whole
+    corpus at fit time, an increment batch at ingest time — gets its
+    nearest cell of the (cid, cv) codebook ``cent``
+    (:func:`_nearest_cells` with n = 1), as (vec_id, *carry, cluster,
+    embedding). Norms once per side (q164's discipline). The codebook
+    collapses to one broadcast row, so the pass is a pure map with
+    ZERO exchanges — the corpus never shuffles for a decision that
+    needs only k broadcast rows."""
+    best = _nearest_cells(F.col("embedding"), F.col("_en"), 1)[0]["cid"]
     return (
         part.withColumn("_en", _norm(F.col("embedding")))
-        .crossJoin(F.broadcast(cells))
-        .select("vec_id", "label", best.alias("cluster"), "embedding")
+        .crossJoin(F.broadcast(_cells_row(cent)))
+        .select("vec_id", *carry, best.alias("cluster"), "embedding")
     )
-
-
-def _with_cnorm(cent: DataFrame) -> DataFrame:
-    return cent.select("cid", "cv", _norm(F.col("cv")).alias("_cn"))
 
 
 def _ivf_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -1628,7 +1626,7 @@ def _ivf_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # outputPartitioning so the second exchange was never elided —
     # r17 ADVICE).
     assign = _assign_to_codebook(
-        tw(spark, sf_dir, "embeddings"), _with_cnorm(cent)
+        tw(spark, sf_dir, "embeddings"), cent
     ).localCheckpoint(eager=True)
     return (cent, assign)
 
@@ -1758,45 +1756,42 @@ def q68_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     build itself is value-checked cross-engine. Cell balance — the
     property IVF's speedup actually depends on — is surfaced by
     q155_ivf_cells as an in-band contract.
-    Scale shape: assignment is one pass over the table against a
-    BROADCAST codebook with a partial-aggregable argmax (max_by) — no
-    vector ever shuffles for index build; the probe joins the
-    (tiny, broadcast) probed-centroid list, so query cost is the
+    Scale shape: the inverted lists come from the memoized index
+    (:func:`ivf_index_for` — one broadcast-codebook assignment pass per
+    source fingerprint; no vector ever shuffles for index build); the
+    query ranks its cells in-row against the broadcast codebook and the
+    (tiny, broadcast) probe set joins the lists, so query cost is the
     probed lists only — the IVF trade the LSH variant (q87/q89) makes
     with hyperplanes instead of centroids."""
-    e = t(spark, sf_dir, "embeddings")
-    # serve from the memoized index: codebook + INVERTED LISTS (the
-    # per-vector cell assignment with its argmax — ties break toward
-    # the LOWEST cid, (sim, -cid) max = the oracle's ORDER BY sim
-    # DESC, cid row_number()=1 — is computed once per source
-    # fingerprint inside ivf_index_for, not per query)
     cent, assign = ivf_index_for(spark, sf_dir)
-    probe = (
-        e.where(F.col("vec_id") == QUERY_VEC_ID)
-        .crossJoin(F.broadcast(cent))
-        .select("cid", cosine_col(F.col("embedding"), F.col("cv")).alias("sim"))
-        .orderBy(F.col("sim").desc(), "cid")
-        .limit(N_PROBE)
-        .select("cid")
+    return _pinned_ivf_view(
+        t(spark, sf_dir, "embeddings"), cent, assign, ("label", "cluster"),
+        Q68_RECALL_TARGET,
     )
-    q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(F.col("embedding").alias("qv"))
-    qsim = cosine_col(F.col("embedding"), F.col("qv"))
-    hits = (
-        assign.join(F.broadcast(probe), assign.cluster == F.col("cid"))
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", "cluster", qsim.alias("_sim"))
-        .orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(ANN_K)
-    )
-    queries1 = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
+
+
+def _pinned_query(e: DataFrame) -> DataFrame:
+    """(query_id, qv) of the catalog's pinned query vector."""
+    return e.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    marked = _mark_exact_topk(
-        hits.withColumn("query_id", F.lit(QUERY_VEC_ID).cast("long")), e, queries1, ANN_K
-    )
-    return _with_recall(marked, ANN_K, Q68_RECALL_TARGET).select(
-        "vec_id", "label", "cluster", F.round("_sim", 4).alias("cos_sim"),
+
+
+def _pinned_ivf_view(
+    e: DataFrame, cent: DataFrame, lists: DataFrame, carry: tuple,
+    target: float,
+) -> DataFrame:
+    """The pinned-query IVF view (q68, q175/q207 and the ingest-tree
+    serves q176/q205): probe the pinned query's N_PROBE nearest cells of
+    ``lists``, keep its top ANN_K by cosine (:func:`ivf_serve_hits`'
+    plan), mark each hit against the exact top-k over ``e`` and attach
+    the in-band recall@k contract at ``target``. ``carry`` names the
+    list columns reported beside vec_id (label, cluster, is_new)."""
+    q = _pinned_query(e)
+    hits = _ivf_topk(lists, cent, q, ANN_K, N_PROBE, carry)
+    marked = _mark_exact_topk(hits, e, q, ANN_K)
+    return _with_recall(marked, ANN_K, target).select(
+        "vec_id", *carry, F.round("_sim", 4).alias("cos_sim"),
         "in_exact_topk", "recall_at_k", "recall_ok",
     )
 
@@ -1816,32 +1811,7 @@ def ivf_probe_hits(
     Scale shape: the codebook broadcasts for BOTH the corpus assignment
     and the query-cell ranking; the probed-cell join broadcasts the
     (|queries| × nprobe)-row probe set; the corpus never shuffles."""
-    # in-row argmax assignment (r17) — the _assign_to_codebook
-    # discipline minus the label column: pure map pass, no exchange
-    centn = cent.select("cid", "cv", _norm(F.col("cv")).alias("_cn"))
-    cells = centn.select(
-        F.struct("cid", "cv", "_cn").alias("_c")
-    ).agg(F.collect_list("_c").alias("_cells"))
-
-    def _neg_sim(c):
-        s = _dot(F.col("embedding"), c["cv"]) / F.nullif(
-            F.col("_en") * c["_cn"], F.lit(0.0)
-        )
-        return F.coalesce(-s, F.lit(float("inf")))
-
-    best = _inrow_min(
-        F.transform(
-            "_cells",
-            lambda c: F.struct(
-                _neg_sim(c).alias("_k"), c["cid"].alias("cid")
-            ),
-        )
-    )["cid"]
-    assign = (
-        e.withColumn("_en", _norm(F.col("embedding")))
-        .crossJoin(F.broadcast(cells))
-        .select("vec_id", best.alias("cluster"), "embedding")
-    )
+    assign = _assign_to_codebook(e, cent, carry=())
     return ivf_serve_hits(assign, cent, queries, k, nprobe)
 
 
@@ -1870,72 +1840,64 @@ def ivf_serve_hits(
     per-query rank (``_rk``) the top-k filter already computed, so a
     caller that reports ranks doesn't pay a second window sort.
 
-    The probe RANKING runs INSIDE each query row: the codebook
-    collapses to ONE broadcast row of (cid, cv, norm) structs, and
-    each query computes sim → sort_array → slice(nprobe) as a
-    higher-order-function expression — the (|queries| × k)-row
-    exchange + window sort the row_number form paid is gone entirely
-    (measured: at k=512 × 10k queries that exchange was ~25 s of a
-    62 s serve; see SCALING.md round 17). Ties and NULL sims order
-    exactly as the window did — (sim DESC, cid ASC), null sims LAST
-    via an +inf sentinel on the negated sort key — so the probed-cell
-    SET stays bit-identical to the oracle's row_number replay. The
-    collapsed codebook row is ~0.5 KB × k (34 MB at the k=2¹⁶ policy
-    cap — inside the 64 MB broadcast threshold)."""
-    qn = queries.withColumn("_qn", _norm(F.col("qv")))
-    cells = cent.select(
-        F.struct("cid", "cv", _norm(F.col("cv")).alias("_cn")).alias("_c")
-    ).agg(F.collect_list("_c").alias("_cells"))
+    The probe RANKING runs INSIDE each query row (:func:`_nearest_cells`
+    over the one-row broadcast codebook) — no (|queries| × k)-row
+    exchange or window sort (measured: at k=512 × 10k queries that
+    exchange was ~25 s of a 62 s serve; see SCALING.md round 17). The
+    probed-cell SET is bit-identical to the oracle's row_number
+    replay."""
+    ranked = _ivf_topk(assign, cent, queries, k, nprobe)
+    return ranked if keep_rank else ranked.drop("_rk")
 
-    def _neg_qsim(c):
-        # same cosine arithmetic as cosine_col (dot / (qn*cn), nullif
-        # zero-norm), negated for the ascending struct sort; NULL →
-        # +inf so null-sim cells rank LAST, as the window's default
-        # NULLS LAST did
-        s = _dot(F.col("qv"), c["cv"]) / F.nullif(
-            F.col("_qn") * c["_cn"], F.lit(0.0)
-        )
-        return F.coalesce(-s, F.lit(float("inf")))
 
-    probe = (
-        qn.crossJoin(F.broadcast(cells))
+def _probe_cells(queries: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, qv, _qn, cid, cv): one row per (query, probed cell)
+    — each (query_id, qv) query's ``nprobe`` nearest cells of
+    ``cent``, ranked in-row by :func:`_nearest_cells`; ``_qn`` is the
+    query norm, ``cv`` the probed centroid."""
+    return (
+        queries.withColumn("_qn", _norm(F.col("qv")))
+        .crossJoin(F.broadcast(_cells_row(cent)))
         .select(
             "query_id",
             "qv",
             "_qn",
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        F.transform(
-                            "_cells",
-                            lambda c: F.struct(
-                                _neg_qsim(c).alias("_nq"),
-                                c["cid"].alias("cid"),
-                            ),
-                        )
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("_p"),
+            F.explode(_nearest_cells(F.col("qv"), F.col("_qn"), nprobe)).alias(
+                "_p"
+            ),
         )
-        .select("query_id", "qv", F.col("_p.cid").alias("cid"), "_qn")
+        .select("query_id", "qv", "_qn", "_p.cid", "_p.cv")
     )
+
+
+def _ivf_topk(
+    assign: DataFrame,
+    cent: DataFrame,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    carry: tuple = (),
+) -> DataFrame:
+    """:func:`ivf_serve_hits`' plan with the list columns ``carry``
+    riding along and the rank kept: (query_id, vec_id, *carry, _sim,
+    _rk)."""
+    probe = _probe_cells(queries, cent, nprobe)
     lists = assign.select(
-        "vec_id", "cluster", "embedding", _norm(F.col("embedding")).alias("_bn")
+        "vec_id", "cluster", "embedding",
+        *[c for c in carry if c != "cluster"],
+        _norm(F.col("embedding")).alias("_bn"),
     )
     sim = _dot(F.col("embedding"), F.col("qv")) / F.nullif(
         F.col("_bn") * F.col("_qn"), F.lit(0.0)
     )
     w = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), "vec_id")
-    ranked = (
+    return (
         lists.join(F.broadcast(probe), lists.cluster == F.col("cid"))
         .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", sim.alias("_sim"))
+        .select("query_id", "vec_id", *carry, sim.alias("_sim"))
         .withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") <= k)
     )
-    return ranked if keep_rank else ranked.drop("_rk")
 
 
 Q155_BALANCE_BOUND = 0.5
@@ -2793,48 +2755,12 @@ def ivfadc_probe_hits(
     qs = queries.select(
         "query_id", F.transform("qv", lambda x: x.cast("double")).alias("qv")
     )
-    # probe ranking runs IN-ROW over a collapsed one-row codebook (the
-    # ivf_serve_hits discipline — no (|queries| × k) exchange + window
-    # sort, the term that grows with the cell-count policy's knob).
-    # The struct carries cv so the winner's centroid feeds the residual
-    # without a join-back; cid is unique, so the trailing cv field can
-    # never influence the (sim DESC, cid ASC, nulls-last) order.
-    cells = cent.select(F.struct("cid", "cv").alias("_c")).agg(
-        F.collect_list("_c").alias("_cells")
-    )
-
-    def _neg_qsim(c):
-        return F.coalesce(
-            -cosine_col(F.col("qv"), c["cv"]), F.lit(float("inf"))
-        )
-
-    qres = (
-        qs.crossJoin(F.broadcast(cells))
-        .select(
-            "query_id",
-            "qv",
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        F.transform(
-                            "_cells",
-                            lambda c: F.struct(
-                                _neg_qsim(c).alias("_nq"),
-                                c["cid"].alias("cid"),
-                                c["cv"].alias("cv"),
-                            ),
-                        )
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("_p"),
-        )
-        .select(
-            "query_id",
-            F.col("_p.cid").alias("pcell"),
-            F.zip_with("qv", F.col("_p.cv"), lambda x, y: x - y).alias("qr"),
-        )
+    # the probed structs carry each cell's cv, so the query residual
+    # needs no join-back to the codebook
+    qres = _probe_cells(qs, cent, nprobe).select(
+        "query_id",
+        F.col("cid").alias("pcell"),
+        F.zip_with("qv", "cv", lambda x, y: x - y).alias("qr"),
     )
     # one ADC LUT row per (query, probed cell), built in-row against
     # the one-row collapsed PQ codebook (r18 wide codes): the
@@ -3024,9 +2950,7 @@ def q160_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`ivfadc_index_for` — fit once, serve many."""
     e = t(spark, sf_dir, "embeddings")
     cent, pcent, codes = ivfadc_index_for(spark, sf_dir)
-    q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
+    q = _pinned_query(e)
     hits = ivfadc_probe_hits(cent, pcent, codes, e, q, ANN_K)
     marked = _mark_exact_topk(hits, e, q, ANN_K, metric="l2")
     rec = marked.agg(
@@ -3335,13 +3259,14 @@ def _standing_key() -> Column:
 IVF_REFRESHED_HEX = "g000"
 
 
-def ivf_standing_hex(artifact: DataFrame) -> str:
-    """The increment-carve boundary is a property of the ATTACHED
-    index artifact, not of the serving code (maintenance.py's
-    ``agg_standing_hex``, applied to the ninth family): read it from
+def standing_hex(artifact: DataFrame) -> str:
+    """The increment-carve boundary of a standing ANN index (the IVF,
+    IVFADC and PQ standing families) is a property of the ATTACHED
+    artifact, not of the serving code (maintenance.py's
+    ``agg_standing_hex``, applied to the ANN families): read it from
     the ``_mms_fit_params`` tag so a refreshed index (boundary moved
-    to :data:`IVF_REFRESHED_HEX`) serves through the SAME q175/q176
-    paths with a provably empty increment."""
+    to :data:`IVF_REFRESHED_HEX`) serves through the SAME q175/q176/
+    q211/q214 paths with a provably empty increment."""
     return getattr(artifact, "_mms_fit_params", {}).get(
         "standing_hex", Q175_STANDING_HEX
     )
@@ -3363,7 +3288,7 @@ def _ivf_standing_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
     cent = ivf_codebook(standing)
     # map-shaped lists; the one clustering shuffle happens at save
     # time (the _ivf_fit note)
-    lists = _assign_to_codebook(standing, _with_cnorm(cent)).localCheckpoint(
+    lists = _assign_to_codebook(standing, cent).localCheckpoint(
         eager=True
     )
     return (cent, lists)
@@ -3394,7 +3319,7 @@ def _ivf_standing_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
     },
     # standing_hex is MUTABLE: a refreshed index legitimately moves the
     # boundary (to IVF_REFRESHED_HEX) and serving code reads the stamped
-    # value back (ivf_standing_hex) — k and iters stay immutable
+    # value back (standing_hex) — k and iters stay immutable
     mutable=("standing_hex",),
 )
 
@@ -3503,55 +3428,18 @@ def _serve_ivf_incr_view(
 ) -> DataFrame:
     """Serve q175's view from a standing (cent, lists) artifact:
     assign the increment carve to the broadcast codebook, union into
-    the lists, probe/top-k/recall-audit. The increment boundary is the
-    ARTIFACT's stamped one (:func:`ivf_standing_hex`), so a refreshed
-    index (q207) serves an empty increment through this same path —
-    shared by q175 and q207."""
+    the lists, serve the pinned-query view (:func:`_pinned_ivf_view`).
+    The increment boundary is the ARTIFACT's stamped one
+    (:func:`standing_hex`), so a refreshed index (q207) serves an
+    empty increment through this same path — shared by q175 and
+    q207."""
     e = valid_embeddings(t(spark, sf_dir, "embeddings"))
-    centn = _with_cnorm(cent)
-    incr = e.where(~(_standing_key() < ivf_standing_hex(cent)))
+    incr = e.where(~(_standing_key() < standing_hex(cent)))
     lists = slists.withColumn("is_new", F.lit(False)).unionByName(
-        _assign_to_codebook(incr, centn).withColumn("is_new", F.lit(True))
+        _assign_to_codebook(incr, cent).withColumn("is_new", F.lit(True))
     )
-    probe = (
-        e.where(F.col("vec_id") == QUERY_VEC_ID)
-        .crossJoin(F.broadcast(centn))
-        .select(
-            "cid",
-            (
-                _dot(F.col("embedding"), F.col("cv"))
-                / F.nullif(_norm(F.col("embedding")) * F.col("_cn"), F.lit(0.0))
-            ).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), "cid")
-        .limit(N_PROBE)
-        .select("cid")
-    )
-    q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qv")
-    )
-    qsim = cosine_col(F.col("embedding"), F.col("qv"))
-    hits = (
-        lists.join(F.broadcast(probe), lists.cluster == F.col("cid"))
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", "cluster", "is_new", qsim.alias("_sim"))
-        .orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(ANN_K)
-    )
-    queries1 = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    marked = _mark_exact_topk(
-        hits.withColumn("query_id", F.lit(QUERY_VEC_ID).cast("long")),
-        e,
-        queries1,
-        ANN_K,
-    )
-    return _with_recall(marked, ANN_K, Q175_RECALL_TARGET).select(
-        "vec_id", "label", "cluster", "is_new",
-        F.round("_sim", 4).alias("cos_sim"),
-        "in_exact_topk", "recall_at_k", "recall_ok",
+    return _pinned_ivf_view(
+        e, cent, lists, ("label", "cluster", "is_new"), Q175_RECALL_TARGET
     )
 
 
@@ -3742,7 +3630,7 @@ def ivf_standing_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> None
     the moved boundary :data:`IVF_REFRESHED_HEX` — everything
     standing, zero pending increments. Because ``standing_hex`` is a
     MUTABLE family param and the serve paths carve at the artifact's
-    stamped boundary (:func:`ivf_standing_hex`), the refreshed index
+    stamped boundary (:func:`standing_hex`), the refreshed index
     attaches and serves through the ordinary lifecycle with no code
     change — q188's snapshot-rotation discipline applied to the ANN
     tier.
@@ -3762,7 +3650,7 @@ def ivf_standing_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> None
     # partitionBy with AQE splitting any skewed cell, and drops the
     # r17 checkpoint materialize-then-rescan (the write is the only
     # consumer of the assignment plan)
-    lists = _assign_to_codebook(e, _with_cnorm(cent)).hint(
+    lists = _assign_to_codebook(e, cent).hint(
         "rebalance", "cluster"
     )
     cent.write.mode("overwrite").parquet(os.path.join(out_dir, "coarse"))
@@ -3843,17 +3731,6 @@ def q207_ivf_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the weakest measurement, the q68/q160/q175 discipline; a broken
 # encode (wrong residual space, mis-joined codes) collapses it to ~0.
 Q211_RECALL_TARGET = 0.4
-
-
-def ivfadc_standing_hex(artifact: DataFrame) -> str:
-    """The increment-carve boundary is a property of the ATTACHED
-    artifact (:func:`ivf_standing_hex` applied to this family): read
-    it from the ``_mms_fit_params`` tag so a refreshed index (boundary
-    moved to :data:`IVF_REFRESHED_HEX`) serves through the SAME
-    q211 path with a provably empty increment."""
-    return getattr(artifact, "_mms_fit_params", {}).get(
-        "standing_hex", Q175_STANDING_HEX
-    )
 
 
 def _ivfadc_standing_fit(
@@ -4065,22 +3942,20 @@ def _serve_ivfadc_incr_view(
     artifact: residual-PQ-encode the increment carve against the
     broadcast codebooks, union into the codes, run q160's serving
     chain, mark is_new + the recall audit. The increment boundary is
-    the ARTIFACT's stamped one (:func:`ivfadc_standing_hex`), so a
+    the ARTIFACT's stamped one (:func:`standing_hex`), so a
     refreshed index (q213) serves an empty increment through this
     same path — shared by q211 and q213."""
     cent, pcent, codes_s = art
     e = t(spark, sf_dir, "embeddings")
-    hex_b = ivfadc_standing_hex(cent)
+    hex_b = standing_hex(cent)
     incr = valid_embeddings(e).where(~(_standing_key() < F.lit(hex_b)))
     # FAISS add(): coarse-assign the increment, residual-encode it
     # against the STANDING PQ codebooks — the index never refits
     inc_resid = _ivfadc_residuals(
-        _assign_to_codebook(incr, _with_cnorm(cent)), cent
+        _assign_to_codebook(incr, cent), cent
     )
     combined = codes_s.unionByName(_ivfadc_codes(inc_resid, pcent))
-    q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
+    q = _pinned_query(e)
     hits = ivfadc_probe_hits(cent, pcent, combined, e, q, ANN_K)
     marked = _mark_exact_topk(hits, e, q, ANN_K, metric="l2")
     rec = marked.agg(
@@ -4376,7 +4251,7 @@ def ivfadc_standing_refresh(
     :data:`IVF_REFRESHED_HEX` — everything standing, zero pending
     increments. Because ``standing_hex`` is a MUTABLE family param and
     the serve path carves at the artifact's stamped boundary
-    (:func:`ivfadc_standing_hex`), the refreshed index attaches and
+    (:func:`standing_hex`), the refreshed index attaches and
     serves through the ordinary lifecycle with no code change —
     q207's rotation discipline applied to the production index.
 
@@ -4390,7 +4265,7 @@ def ivfadc_standing_refresh(
     e = valid_embeddings(tw(spark, sf_dir, "embeddings"))
     cent = ivf_codebook(e)
     resid = _ivfadc_residuals(
-        _assign_to_codebook(e, _with_cnorm(cent)), cent
+        _assign_to_codebook(e, cent), cent
     ).localCheckpoint(eager=True)
     pcent = pq_codebooks(resid.select("vec_id", "embedding"))
     # ONE clustering shuffle, straight into the partitioned write
@@ -4483,17 +4358,6 @@ def q213_ivfadc_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q68/q157/q211 discipline. A broken encode (wrong subspace split,
 # mis-joined codes) collapses it to ~0.
 Q214_RECALL_TARGET = 0.6
-
-
-def pq_standing_hex(artifact: DataFrame) -> str:
-    """The increment-carve boundary is a property of the ATTACHED
-    artifact (:func:`ivf_standing_hex` applied to this family): read
-    it from the ``_mms_fit_params`` tag so a refreshed index (boundary
-    moved to :data:`IVF_REFRESHED_HEX`) serves through the SAME q214
-    path with a provably empty increment."""
-    return getattr(artifact, "_mms_fit_params", {}).get(
-        "standing_hex", Q175_STANDING_HEX
-    )
 
 
 def _pq_standing_fit(
@@ -4672,12 +4536,12 @@ def _serve_pq_incr_view(
     PQ-encode the increment carve against the broadcast codebooks,
     union into the codes, run q157's serving chain, mark is_new + the
     recall audit. The increment boundary is the ARTIFACT's stamped one
-    (:func:`pq_standing_hex`), so a refreshed index (q216) serves an
+    (:func:`standing_hex`), so a refreshed index (q216) serves an
     empty increment through this same path — shared by q214 and
     q216."""
     cent, codes_s = art
     e = t(spark, sf_dir, "embeddings")
-    hex_b = pq_standing_hex(cent)
+    hex_b = standing_hex(cent)
     incr = valid_embeddings(e).where(~(_standing_key() < F.lit(hex_b)))
     combined = codes_s.unionByName(_pq_encode(incr, cent))
     # one LUT row for the pinned query, one in-row sum per candidate
@@ -4986,7 +4850,7 @@ def pq_standing_refresh(
     :data:`IVF_REFRESHED_HEX` — everything standing, zero pending
     increments. Because ``standing_hex`` is a MUTABLE family param and
     the serve path carves at the artifact's stamped boundary
-    (:func:`pq_standing_hex`), the refreshed index attaches and serves
+    (:func:`standing_hex`), the refreshed index attaches and serves
     through the ordinary lifecycle with no code change — q207's
     rotation discipline applied to the flat-PQ index.
 

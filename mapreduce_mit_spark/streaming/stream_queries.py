@@ -49,9 +49,8 @@ from ..plans._util import money_sum as _total_value
 # defaulted: a stream-stream join instantiates 4 stores per partition,
 # and store setup dominates small micro-batches (measured at sf0.1:
 # 8 parts → 2.33 s, 4 → 1.75 s per availableNow drain, same results).
-# 4 keeps every core class of the 32-thread box busy at test scale; a
-# real deployment sizes this to events/sec via the env override.
-STREAM_STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_PARTS", "4"))
+# 4 keeps every core class of the 32-thread box busy at test scale.
+STREAM_STATE_PARTITIONS = 4
 
 # Per-sink StreamingQuery handles from the last availableNow drain.
 # Observability hook: lets tests (and operators) assert state-store
@@ -1915,9 +1914,8 @@ def _stage_ivf_lists_tree(spark: SparkSession, sf_dir: str, sink_key: str) -> st
     from ..plans.similarity import (
         _assign_to_codebook,
         _standing_key,
-        _with_cnorm,
-        ivf_standing_hex,
         ivf_standing_index_for,
+        standing_hex,
         valid_embeddings,
     )
     from ..sources.io import ensure_reader_confs, load_table
@@ -1935,10 +1933,11 @@ def _stage_ivf_lists_tree(spark: SparkSession, sf_dir: str, sink_key: str) -> st
     e = valid_embeddings(load_table(spark, sf_dir, "embeddings"))
     # the standing tier: fitted artifact (or attached — no refit here)
     cent, _slists = ivf_standing_index_for(spark, sf_dir)
-    incr = e.where(~(_standing_key() < ivf_standing_hex(cent))).select(
+    incr = e.where(~(_standing_key() < standing_hex(cent))).select(
         "vec_id", "label", "embedding"
     )
-    centn = _with_cnorm(cent).localCheckpoint(eager=True)
+    # every micro-batch re-reads the codebook: pin the k rows once
+    codebook = cent.localCheckpoint(eager=True)
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS * 2))
@@ -1952,7 +1951,7 @@ def _stage_ivf_lists_tree(spark: SparkSession, sf_dir: str, sink_key: str) -> st
             def ingest(batch: DataFrame, batch_id: int) -> None:
                 # cluster sub-partitioning inside the batch partition:
                 # the probe predicate becomes a directory prune
-                _assign_to_codebook(batch, centn).write.mode(
+                _assign_to_codebook(batch, codebook).write.mode(
                     "overwrite"
                 ).partitionBy("cluster").parquet(
                     os.path.join(lists_dir, f"batch_id={batch_id}")
@@ -1989,16 +1988,11 @@ def _serve_ivf_ingest_view(
     q205 share (both register q175's oracle, so the view's shape is
     the one contract)."""
     from ..plans.similarity import (
-        ANN_K,
         N_PROBE,
-        QUERY_VEC_ID,
         Q175_RECALL_TARGET,
-        _dot,
-        _mark_exact_topk,
-        _norm,
-        _with_cnorm,
-        _with_recall,
-        cosine_col,
+        _pinned_ivf_view,
+        _pinned_query,
+        _probe_cells,
         ivf_standing_index_for,
         valid_embeddings,
     )
@@ -2007,59 +2001,26 @@ def _serve_ivf_ingest_view(
     ensure_reader_confs(spark)
     e = valid_embeddings(load_table(spark, sf_dir, "embeddings"))
     cent, slists = ivf_standing_index_for(spark, sf_dir)
-    centn = _with_cnorm(cent).localCheckpoint(eager=True)
     tree = q176_ingested_tree(spark, lists_dir)
 
-    # serve the pinned query from standing artifact ∪ ingested tree
-    # (q175's contract). The probed cells materialize as a static
-    # predicate: N_PROBE ids ranked against the k-row codebook — a
-    # bounded driver-side read (k = 8 here; still trivial at k = 2^16)
-    # that lets BOTH cluster-partitioned tiers file-prune at planning
-    # time instead of row-filtering after the scan.
-    probe = (
-        e.where(F.col("vec_id") == QUERY_VEC_ID)
-        .crossJoin(F.broadcast(centn))
-        .select(
-            "cid",
-            (
-                _dot(F.col("embedding"), F.col("cv"))
-                / F.nullif(_norm(F.col("embedding")) * F.col("_cn"), F.lit(0.0))
-            ).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), "cid")
-        .limit(N_PROBE)
+    # The probed cells materialize as a static predicate: N_PROBE ids
+    # ranked against the k-row codebook — a bounded collect()
+    # (k = 8 here; still trivial at k = 2^16) that lets BOTH
+    # cluster-partitioned tiers file-prune at planning time instead of
+    # row-filtering after the scan.
+    probed_cells = [
+        r.cid
+        for r in _probe_cells(_pinned_query(e), cent, N_PROBE)
         .select("cid")
-    )
-    probed_cells = [r.cid for r in probe.collect()]
+        .collect()
+    ]
     combined = (
         slists.withColumn("is_new", F.lit(False))
         .unionByName(tree.withColumn("is_new", F.lit(True)))
         .where(F.col("cluster").isin(probed_cells))
     )
-    qv = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qv")
-    )
-    qsim = cosine_col(F.col("embedding"), F.col("qv"))
-    hits = (
-        combined.where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", "label", "cluster", "is_new", qsim.alias("_sim"))
-        .orderBy(F.col("_sim").desc(), "vec_id")
-        .limit(ANN_K)
-    )
-    queries1 = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    marked = _mark_exact_topk(
-        hits.withColumn("query_id", F.lit(QUERY_VEC_ID).cast("long")),
-        e,
-        queries1,
-        ANN_K,
-    )
-    return _with_recall(marked, ANN_K, Q175_RECALL_TARGET).select(
-        "vec_id", "label", "cluster", "is_new",
-        F.round("_sim", 4).alias("cos_sim"),
-        "in_exact_topk", "recall_at_k", "recall_ok",
+    return _pinned_ivf_view(
+        e, cent, combined, ("label", "cluster", "is_new"), Q175_RECALL_TARGET
     )
 
 
@@ -2071,7 +2032,7 @@ def _serve_ivf_ingest_view(
 # ORACLE VALIDITY: the bound SQL carves at the DEFAULT standing
 # boundary (Q175_STANDING_HEX). If a q207-refreshed artifact is
 # ATTACHED in the same session, the engine carves at the artifact's
-# stamped ivf_standing_hex and the value-check would mismatch by
+# stamped standing_hex and the value-check would mismatch by
 # construction — the driver harness always runs in a fresh session
 # (default artifact), and the lifecycle tests that do attach a
 # refreshed artifact restore the session cache before any oracle run.

@@ -494,10 +494,10 @@ def test_ivf_refresh_attach_moved_boundary_and_restores_cache(spark, tmp_path):
     prev = cache.get(key)
     try:
         cent, _slists = sim.ivf_standing_index_attach(spark, SF_SMALL, out)
-        assert sim.ivf_standing_hex(cent) == sim.IVF_REFRESHED_HEX
+        assert sim.standing_hex(cent) == sim.IVF_REFRESHED_HEX
         incr = sim.valid_embeddings(
             load_table(spark, SF_SMALL, "embeddings")
-        ).where(~(sim._standing_key() < sim.ivf_standing_hex(cent)))
+        ).where(~(sim._standing_key() < sim.standing_hex(cent)))
         assert incr.count() == 0, "refreshed boundary must empty the increment"
     finally:
         if prev is not None:
@@ -561,10 +561,10 @@ def test_ivfadc_refresh_attach_moved_boundary_and_restores_cache(
         cent, _pcent, _codes = sim.ivfadc_standing_index_attach(
             spark, SF_SMALL, out
         )
-        assert sim.ivfadc_standing_hex(cent) == sim.IVF_REFRESHED_HEX
+        assert sim.standing_hex(cent) == sim.IVF_REFRESHED_HEX
         incr = sim.valid_embeddings(
             load_table(spark, SF_SMALL, "embeddings")
-        ).where(~(sim._standing_key() < sim.ivfadc_standing_hex(cent)))
+        ).where(~(sim._standing_key() < sim.standing_hex(cent)))
         assert incr.count() == 0, "refreshed boundary must empty the increment"
     finally:
         if prev is not None:
@@ -631,10 +631,10 @@ def test_pq_refresh_attach_moved_boundary_and_restores_cache(
     prev = cache.get(key)
     try:
         cent, _codes = sim.pq_standing_index_attach(spark, SF_SMALL, out)
-        assert sim.pq_standing_hex(cent) == sim.IVF_REFRESHED_HEX
+        assert sim.standing_hex(cent) == sim.IVF_REFRESHED_HEX
         incr = sim.valid_embeddings(
             load_table(spark, SF_SMALL, "embeddings")
-        ).where(~(sim._standing_key() < sim.pq_standing_hex(cent)))
+        ).where(~(sim._standing_key() < sim.standing_hex(cent)))
         assert incr.count() == 0, "refreshed boundary must empty the increment"
     finally:
         if prev is not None:

@@ -430,16 +430,17 @@ def test_ivf_assignment_broadcasts_codebook(spark, plan):
       checkpointed artifact (no corpus-wide assignment recompute — no
       max_by aggregate in the serve plan) and still meets the
       broadcast codebook for the query-side probe.
-    - BUILD: the assignment dataflow itself (the plan ivf_index_for
-      materializes) broadcasts the codebook via
-      BroadcastNestedLoopJoin and argmaxes with max_by — the
+    - BUILD: the library's assignment pass (``_assign_to_codebook``,
+      the plan ivf_index_for materializes) broadcasts the codebook via
+      BroadcastNestedLoopJoin and picks each cell in-row — the
       embeddings never shuffle for cluster assignment."""
     import contextlib
     import io
 
-    from pyspark.sql import functions as F
-
-    from mapreduce_mit_spark.plans.similarity import codebook_for, cosine_col
+    from mapreduce_mit_spark.plans.similarity import (
+        _assign_to_codebook,
+        codebook_for,
+    )
     from mapreduce_mit_spark.sources.io import load_table
 
     p = plan("q68_ivf_ann")
@@ -448,20 +449,12 @@ def test_ivf_assignment_broadcasts_codebook(spark, plan):
 
     e = load_table(spark, SF_SMALL, "embeddings")
     cent = codebook_for(spark, SF_SMALL)
-    sims = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "cid",
-        cosine_col(F.col("embedding"), F.col("cv")).alias("sim"),
-    )
-    build = sims.groupBy("vec_id").agg(
-        F.max_by("cid", F.struct(F.col("sim"), (-F.col("cid")).alias("nc")))
-        .alias("cluster")
-    )
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        build.explain("formatted")
+        _assign_to_codebook(e, cent).explain("formatted")
     bp = buf.getvalue()
     assert "BroadcastNestedLoopJoin" in bp
-    assert "max_by" in bp
+    assert "hashpartitioning(vec_id" not in bp
     assert "SortMergeJoin" not in bp
 
 
@@ -1215,7 +1208,6 @@ def test_assignment_and_encode_passes_have_no_exchange(spark):
         _assign_to_codebook,
         _ivfadc_codes,
         _pq_encode,
-        _with_cnorm,
         codebook_for,
         pq_index_for,
         valid_embeddings,
@@ -1232,7 +1224,7 @@ def test_assignment_and_encode_passes_have_no_exchange(spark):
             df.explain("formatted")
         return buf.getvalue()
 
-    assign_plan = fmt(_assign_to_codebook(e, _with_cnorm(cent)))
+    assign_plan = fmt(_assign_to_codebook(e, cent))
     encode_plan = fmt(_pq_encode(e, pcent))
     adc_plan = fmt(
         _ivfadc_codes(
@@ -1259,18 +1251,23 @@ def test_assignment_and_encode_passes_have_no_exchange(spark):
 
 
 def test_inrow_assignment_zero_norm_sentinel(spark):
-    """The in-row argmax must keep the oracle's NULL ordering: a
-    zero-norm vector has NULL cosine against every centroid; the
-    oracle's replay (ORDER BY sim DESC NULLS LAST, cid → row 1) lands
-    it in the LOWEST cid, exactly as the old max_by(struct(sim, -cid))
-    form did. Pin it with a crafted zero vector so the sentinel can
-    never regress silently (the fixtures contain no zero vectors)."""
+    """The in-row nearest-cell kernel must keep the oracle's NULL
+    ordering: a zero-norm vector has NULL cosine against every
+    centroid. The oracle's replay (ORDER BY sim DESC NULLS LAST, cid)
+    lands its assignment (n = 1) in the LOWEST cid and its probe
+    (n = N_PROBE) on cids 0..N_PROBE-1 in order — every key is the
+    +inf sentinel, so ties go to the lowest cid. Pin both sides with a
+    crafted zero vector so the sentinel can never regress silently
+    (the fixtures contain no zero vectors)."""
     from pyspark.sql import functions as F
 
     from mapreduce_mit_spark.plans.similarity import (
         DIM,
+        N_PROBE,
         _assign_to_codebook,
-        _with_cnorm,
+        _cells_row,
+        _nearest_cells,
+        _norm,
         codebook_for,
     )
 
@@ -1278,8 +1275,20 @@ def test_inrow_assignment_zero_norm_sentinel(spark):
     zero = spark.createDataFrame(
         [(10_000_000, "z", [0.0] * DIM)], "vec_id long, label string, embedding array<float>"
     )
-    row = _assign_to_codebook(zero, _with_cnorm(cent)).collect()[0]
+    row = _assign_to_codebook(zero, cent).collect()[0]
     assert row.cluster == 0, row
+
+    probe = (
+        zero.crossJoin(F.broadcast(_cells_row(cent)))
+        .select(
+            _nearest_cells(
+                F.col("embedding"), _norm(F.col("embedding")), N_PROBE
+            ).alias("p")
+        )
+        .collect()[0]
+        .p
+    )
+    assert [c.cid for c in probe] == list(range(N_PROBE)), probe
 
 
 def test_valid_embeddings_rejects_nonfinite(spark):
